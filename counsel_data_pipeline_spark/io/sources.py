@@ -107,9 +107,17 @@ def read_clinic_json(
 
     These files are single-document JSON (the reference writes
     ``JSON.stringify(wrapper, null, 2)``), small by construction (one file
-    per county / per run), so parsing happens on the driver and the rows are
-    parallelized. Landing-zone data at scale should instead be written as
-    JSONL/parquet and read with spark.read with a declared schema.
+    per county / per run), so the file is parsed on the driver and its rows
+    go to Spark as ONE JSON array document inside the query:
+    ``inline(from_json(doc, schema_of_json(doc)))``. The analyzer infers the
+    schema and the optimizer folds the parse into a literal, so the read
+    fires no Spark job and later scans run in the JVM, with no Python
+    workers. ``schema_of_json`` uses the JSON data source's inference
+    (fields sorted by name, numbers widened, numeric/string mixes and
+    all-null keys read as strings), so the frame equals ``spark.read.json``
+    over the same rows. Landing-zone data at scale should instead be
+    written as JSONL/parquet and read with spark.read with a declared
+    schema.
 
     An ``ingest_order`` column is attached — the reference's dedup/merge
     semantics are insertion-order-sensitive (SURVEY §2.4 A1/A2) and Spark
@@ -127,9 +135,10 @@ def read_clinic_json(
         from counsel_data_pipeline_spark.schemas import RAW_GRID_ROW
 
         return spark.createDataFrame([], schema=RAW_GRID_ROW)
-    # Route through the JSON line reader for permissive schema inference.
-    rdd = spark.sparkContext.parallelize([json.dumps(r, ensure_ascii=False) for r in indexed])
-    return spark.read.json(rdd)
+    doc = json.dumps(indexed, ensure_ascii=False)
+    return spark.sql(
+        "SELECT inline(from_json(:doc, schema_of_json(:doc)))", args={"doc": doc}
+    )
 
 
 def read_jsonl_quarantine(

@@ -73,27 +73,26 @@ def ensure_geo_cols(df: DataFrame) -> DataFrame:
     typed nulls and coerce ``components`` (struct when schema-inferred from
     JSON, map in the declared schema) to map<string,string> so frames from
     different sources union/compare cleanly."""
-    out = df
+    dtypes = dict(df.dtypes)
+    cols = {}
     for name, typ in _GEO_TYPES.items():
-        if name not in out.columns:
-            out = out.withColumn(name, F.lit(None).cast(typ))
-        elif name == "components" and not dict(out.dtypes)[name].startswith("map"):
-            out = out.withColumn(
-                name, F.from_json(F.to_json(F.col(name)), "map<string,string>")
-            )
+        if name not in dtypes:
+            cols[name] = F.lit(None).cast(typ)
+        elif name == "components" and not dtypes[name].startswith("map"):
+            cols[name] = F.from_json(F.to_json(F.col(name)), "map<string,string>")
         else:
-            out = out.withColumn(name, F.col(name).cast(typ))
-    return out
+            cols[name] = F.col(name).cast(typ)
+    return df.withColumns(cols)
 
 
 def with_diff_keys(df: DataFrame) -> DataFrame:
     org_url = F.col("org_url") if "org_url" in df.columns else F.lit(None).cast("string")
     map_url = F.col("map_url") if "map_url" in df.columns else F.lit(None).cast("string")
     dom = domain_of(org_url)
-    return df.withColumn("__phone_k", normalize_phone(F.col("phone"))).withColumn(
-        "__domain_k",
-        F.when(dom != "", dom).otherwise(domain_of(map_url)),
-    )
+    return df.withColumns({
+        "__phone_k": normalize_phone(F.col("phone")),
+        "__domain_k": F.when(dom != "", dom).otherwise(domain_of(map_url)),
+    })
 
 
 def _bucket_stats(prev: DataFrame, key: str, order_col: str) -> DataFrame:
@@ -123,7 +122,17 @@ def snapshot_split(
 
     ``carried`` = clean columns + inherited GEO_COLS; ``need_geo`` = clean
     columns only. Both retain ``clean``'s ingest_order column if present.
+    Both are filters over one join (:func:`match_snapshot`); a caller that
+    reads both can pin that join and split it with :func:`split_matched`.
     """
+    return split_matched(match_snapshot(clean, prev, prev_order), clean.columns)
+
+
+def match_snapshot(
+    clean: DataFrame, prev: DataFrame, prev_order: str = "prev_order"
+) -> DataFrame:
+    """The split join: every clean row plus its snapshot match ``__match``
+    (the inherited GEO_COLS struct, null when the row needs geocoding)."""
     clean_k = with_diff_keys(clean)
     prev_k = with_diff_keys(ensure_geo_cols(prev))
 
@@ -159,9 +168,13 @@ def snapshot_split(
     match = F.when(phone_claims, F.col("__phone_good")).when(
         domain_claims, F.col("__domain_good")
     )
-    j = j.withColumn("__match", match)
+    return j.withColumn("__match", match)
 
-    clean_cols = clean.columns
+
+def split_matched(
+    j: DataFrame, clean_cols: list[str]
+) -> tuple[DataFrame, DataFrame]:
+    """(carried, need_geo) from a :func:`match_snapshot` frame."""
     carried = j.filter(F.col("__match").isNotNull()).select(
         *clean_cols, *[F.col(f"__match.{c}").alias(c) for c in GEO_COLS]
     )

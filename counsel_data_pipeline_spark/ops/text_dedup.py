@@ -282,7 +282,15 @@ def _df_ranked_shingles(
     collision between two equal-df shingles could in principle perturb
     the order — the same accepted collision class as ``_shingle_key``;
     the bruteforce property tests and the driver's oracle rows pin the
-    output.)"""
+    output.)
+
+    Cache lifecycle: both frames are lazy persists, like
+    ``pin(eager=False)`` (ops/materialize): no job runs here, and the
+    library never unpersists them, because the consuming query is still
+    lazy when this returns. They hold two CacheManager entries until the
+    session ends or the caller releases them with
+    ``spark.catalog.clearCache()`` once the returned pairs have been
+    consumed, as ``bench.py`` does after every query."""
     sets = _doc_shingle_sets(df, id_col, text_col, n).persist()
     sh = sets.select(
         "id", F.size("shs").alias("sz"), F.explode("shs").alias("shingle")
@@ -362,8 +370,9 @@ def jaccard_prefix_pairs(
     Same result set as ``jaccard_pairs(..., max_shingle_df=None)`` with
     threshold t = t_num/t_den, but the candidate join touches only each
     document's PREFIX: order every document's shingles by ascending
-    corpus document-frequency (rarest first; ties broken by the shingle
-    string so the global order is total and shared by all documents) and
+    corpus document-frequency (rarest first; ties broken by the 8-byte
+    shingle key, so the global order is total and shared by all
+    documents — see :func:`_df_ranked_shingles`) and
     keep the first |x| - ceil(t*|x|) + 1. Completeness: if J(x,y) >= t
     then the common shingles number o >= ceil(t*|x|), while x's suffix
     holds only ceil(t*|x|) - 1 positions — so the globally-smallest
@@ -381,6 +390,8 @@ def jaccard_prefix_pairs(
     Returns (id_a, id_b, inter, size_a, size_b, jaccard), id_a < id_b;
     threshold is the exact rational t_num/t_den (no float in the prefix
     arithmetic, so both engines agree on every prefix length).
+    The two cached scaffolding frames stay until the caller runs
+    ``spark.catalog.clearCache()`` (see :func:`_df_ranked_shingles`).
     """
     sets, ranked = _df_ranked_shingles(df, id_col, text_col, n)
     prefix = _prefix_slice(ranked, t_num, t_den)
@@ -472,6 +483,8 @@ def containment_prefix_pairs(
 
     Returns (id_a, id_b, inter, size_a, size_b, containment) with
     id_a < id_b; threshold is the exact rational t_num/t_den.
+    The two cached scaffolding frames stay until the caller runs
+    ``spark.catalog.clearCache()`` (see :func:`_df_ranked_shingles`).
     """
     sets, ranked = _df_ranked_shingles(df, id_col, text_col, n)
     prefix = _prefix_slice(ranked, t_num, t_den).select(

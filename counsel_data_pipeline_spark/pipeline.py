@@ -20,6 +20,15 @@ clean→split→enrich→recombine, and only the delta (typically tiny — the
 observed steady-state delta is 3 rows of 618) reaches the rate-limited
 enrichment stage. The expensive path scales with CHANGE, not data size —
 that is what makes the same DAG viable at 100 TB.
+
+Each frame of a daily batch is computed once. The landing files are read
+by ``read_clinic_json``, which parses them inside the query plan (no
+schema-inference job, no Python workers on later scans). The split join
+is pinned before the change count, so the carried rows reuse it, and the
+final frame is pinned, so both validation gates and the publish read one
+computation of recombine + enrich. The pins are lazy
+(``ops/materialize.pin(eager=False)``); the caller releases them with
+:meth:`IncrementalResult.release`.
 """
 
 from __future__ import annotations
@@ -33,8 +42,9 @@ from pyspark.sql import functions as F
 from .io.sources import read_clinic_json
 from .ops.clean import CLEAN_COLUMNS, clean_rows
 from .ops.dedup import uniq_by_key
-from .ops.diff import GEO_COLS, recombine, snapshot_split
+from .ops.diff import GEO_COLS, match_snapshot, recombine, split_matched
 from .ops.enrich import EnrichResult, Resolver, empty_cache, enrich, upsert_cache
+from .ops.materialize import pin
 from .ops.merge import merge_yes_no
 from .ops.validate import ValidationSplit, split_geocoded, split_valid
 
@@ -91,6 +101,11 @@ def crawl_clean_merge(
 
 @dataclass
 class IncrementalResult:
+    """What one incremental batch produced. ``final`` and the split join
+    behind ``delta`` are lazy pins, listed in ``pinned``: they stay cached
+    until the caller calls :meth:`release` (or clears the session's
+    cache), once the gates have been read and the batch published."""
+
     final: DataFrame            # every clean row + GEO_COLS, clean order
     delta: DataFrame            # the rows that needed enrichment (T3 artifact)
     change_count: int           # A4: len(delta) — drives the publish gate
@@ -98,6 +113,12 @@ class IncrementalResult:
     cache: DataFrame            # cache after upsert (K4)
     schema_gate: ValidationSplit    # V1 over the final rows
     geocode_gate: ValidationSplit   # V3 over the final rows
+    pinned: tuple[DataFrame, ...] = ()  # the batch's cached frames
+
+    def release(self) -> None:
+        """Drop the batch's cached frames."""
+        for df in self.pinned:
+            df.unpersist()
 
 
 def diff_enrich_publish(
@@ -115,13 +136,16 @@ def diff_enrich_publish(
     (the polymorphic reader attaches them). The early-exit on an empty
     delta (T2) skips the enrichment stage entirely — the ``isEmpty`` guard
     is explicit because the rate-limited stage must not even be scheduled
-    when there is nothing to do."""
+    when there is nothing to do.
+
+    The split join and ``final`` are pinned lazily, so each is computed
+    once however many gates and publishes read it; the caller releases
+    them (:meth:`IncrementalResult.release`)."""
     spark = clean.sparkSession
     cache = cache if cache is not None else empty_cache(spark)
 
-    carried, need_geo = snapshot_split(clean, prev)
-    carried = carried.cache()
-    need_geo = need_geo.cache()
+    split = pin(match_snapshot(clean, prev), eager=False)
+    carried, need_geo = split_matched(split, clean.columns)
     change_count = need_geo.count()  # A4; also materializes the split once
 
     if change_count == 0:
@@ -134,7 +158,7 @@ def diff_enrich_publish(
             nominatim=nominatim, min_interval_s=min_interval_s,
         )
 
-    final = recombine(clean, carried, enrich_res.enriched)
+    final = pin(recombine(clean, carried, enrich_res.enriched), eager=False)
     schema_gate = split_valid(final)
     geocode_gate = split_geocoded(final)
     new_cache = upsert_cache(cache, enrich_res.new_cache_entries)
@@ -147,6 +171,7 @@ def diff_enrich_publish(
         cache=new_cache,
         schema_gate=schema_gate,
         geocode_gate=geocode_gate,
+        pinned=(split, final),
     )
 
 

@@ -418,7 +418,10 @@ def zorder_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         eager=False,
     )
-    box = joint.agg(F.sum("n_box").cast("bigint").alias("rows_in_box"))
+    # coalesce: the oracle's count(*) reads 0, not NULL, on an empty table
+    box = joint.agg(
+        F.coalesce(F.sum("n_box"), F.lit(0)).cast("bigint").alias("rows_in_box")
+    )
     stacked = joint.select(
         F.lit("zorder").alias("layout"), F.col("shard_z").alias("shard"),
         "min_p", "max_p", "min_s", "max_s", "p_lo", "p_hi", "s_lo", "s_hi",
@@ -446,7 +449,9 @@ def zorder_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
         zones.groupBy("layout")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_shards"),
-            F.sum(touched.cast("int")).cast("bigint").alias("shards_touched"),
+            # CASE WHEN .. THEN 1 ELSE 0, as the oracle: a shard whose zone
+            # is NULL (all keys NULL) counts 0, not NULL
+            F.sum(F.when(touched, 1).otherwise(0)).cast("bigint").alias("shards_touched"),
         )
         .crossJoin(F.broadcast(box))
     )

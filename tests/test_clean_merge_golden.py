@@ -1,7 +1,7 @@
 """Golden tests: reproduce the reference's committed per-county outputs
 (raw → clean → dedup → merge → sinks) byte-for-byte-ish.
 
-Fixtures: /root/reference/src/out/01_臺北市_{yes,no}_raw.json must produce
+Fixtures: <reference>/src/out/01_臺北市_{yes,no}_raw.json must produce
 01_臺北市_merged_clean.json (value-equal rows, same order) and
 01_臺北市_merged_clean.csv (exact text). See SURVEY §5.6 / FIXTURES §1.7.
 """
@@ -17,7 +17,7 @@ from counsel_data_pipeline_spark.ops.clean import CLEAN_COLUMNS, clean_rows
 from counsel_data_pipeline_spark.ops.dedup import uniq_by_key
 from counsel_data_pipeline_spark.ops.merge import merge_yes_no
 
-REF_OUT = "/root/reference/src/out"
+REF_OUT = "src/out"  # under the reference checkout
 
 COUNTIES = [
     "01_臺北市", "02_臺中市", "03_臺南市", "04_高雄市", "05_基隆市",
@@ -28,18 +28,18 @@ COUNTIES = [
 ]
 
 
-def _load(spark, name):
-    return read_clinic_json(spark, os.path.join(REF_OUT, name))
+def _load(spark, reference, name):
+    return read_clinic_json(spark, os.path.join(reference, REF_OUT, name))
 
 
 @pytest.mark.parametrize("county", COUNTIES)
-def test_clean_merge_reproduces_golden_json(spark, county):
-    yes = uniq_by_key(_load(spark, f"{county}_yes_raw.json"))
-    no = uniq_by_key(_load(spark, f"{county}_no_raw.json"))
+def test_clean_merge_reproduces_golden_json(spark, reference, county):
+    yes = uniq_by_key(_load(spark, reference, f"{county}_yes_raw.json"))
+    no = uniq_by_key(_load(spark, reference, f"{county}_no_raw.json"))
     merged = merge_yes_no(clean_rows(yes), clean_rows(no))
     got = collect_rows(merged.select("merge_order", *CLEAN_COLUMNS), order_col="merge_order")
 
-    expected = json.load(open(os.path.join(REF_OUT, f"{county}_merged_clean.json")))
+    expected = json.load(open(os.path.join(reference, REF_OUT, f"{county}_merged_clean.json")))
     exp_rows = extract_rows(expected)
     assert len(got) == expected["total"] == len(exp_rows)
     for i, (g, e) in enumerate(zip(got, exp_rows)):
@@ -47,12 +47,12 @@ def test_clean_merge_reproduces_golden_json(spark, county):
 
 
 @pytest.mark.parametrize("county", COUNTIES)
-def test_clean_merge_reproduces_golden_csv(spark, county):
-    yes = uniq_by_key(_load(spark, f"{county}_yes_raw.json"))
-    no = uniq_by_key(_load(spark, f"{county}_no_raw.json"))
+def test_clean_merge_reproduces_golden_csv(spark, reference, county):
+    yes = uniq_by_key(_load(spark, reference, f"{county}_yes_raw.json"))
+    no = uniq_by_key(_load(spark, reference, f"{county}_no_raw.json"))
     merged = merge_yes_no(clean_rows(yes), clean_rows(no))
     rows = collect_rows(merged.select("merge_order", *CLEAN_COLUMNS), order_col="merge_order")
 
     got = csv_text(rows, CLEAN_COLUMNS)
-    expected = open(os.path.join(REF_OUT, f"{county}_merged_clean.csv"), encoding="utf-8").read()
+    expected = open(os.path.join(reference, REF_OUT, f"{county}_merged_clean.csv"), encoding="utf-8").read()
     assert got == expected.rstrip("\n") or got == expected

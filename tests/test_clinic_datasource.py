@@ -2,6 +2,8 @@
 (io/clinic_datasource.py): distributed, one partition per file, and the
 clean/merge DAG over it must equal the driver-side reader path."""
 
+import os
+
 import pytest
 
 from counsel_data_pipeline_spark.io import clinic_datasource as ds
@@ -10,22 +12,24 @@ from counsel_data_pipeline_spark.ops.clean import CLEAN_COLUMNS, clean_rows
 from counsel_data_pipeline_spark.ops.dedup import uniq_by_key
 from counsel_data_pipeline_spark.ops.merge import merge_yes_no
 
-REF_OUT = "/root/reference/src/out"
+REF_OUT = "src/out"  # under the reference checkout
 COUNTY = "05_基隆市"
 
 
-def test_datasource_partitions_and_lineage(spark):
+def test_datasource_partitions_and_lineage(spark, reference):
     ds.register(spark)
-    df = spark.read.format("clinicjson").load(f"{REF_OUT}/0*_yes_raw.json")
+    ref_out = os.path.join(reference, REF_OUT)
+    df = spark.read.format("clinicjson").load(f"{ref_out}/0*_yes_raw.json")
     assert df.rdd.getNumPartitions() == df.select("source_file").distinct().count() > 1
     # ingest_order restarts per file (insertion order is per-document)
     firsts = df.filter("ingest_order = 0").count()
     assert firsts == df.select("source_file").distinct().count()
 
 
-def test_datasource_clean_merge_parity_with_driver_reader(spark):
+def test_datasource_clean_merge_parity_with_driver_reader(spark, reference):
     ds.register(spark)
-    raw = spark.read.format("clinicjson").load(f"{REF_OUT}/{COUNTY}_*_raw.json")
+    ref_out = os.path.join(reference, REF_OUT)
+    raw = spark.read.format("clinicjson").load(f"{ref_out}/{COUNTY}_*_raw.json")
     sides = {}
     for kind in ("yes", "no"):
         side = raw.filter(raw.source_file.endswith(f"{COUNTY}_{kind}_raw.json"))
@@ -33,8 +37,8 @@ def test_datasource_clean_merge_parity_with_driver_reader(spark):
     got = merge_yes_no(sides["yes"], sides["no"])
 
     exp = merge_yes_no(
-        clean_rows(uniq_by_key(read_clinic_json(spark, f"{REF_OUT}/{COUNTY}_yes_raw.json"))),
-        clean_rows(uniq_by_key(read_clinic_json(spark, f"{REF_OUT}/{COUNTY}_no_raw.json"))),
+        clean_rows(uniq_by_key(read_clinic_json(spark, f"{ref_out}/{COUNTY}_yes_raw.json"))),
+        clean_rows(uniq_by_key(read_clinic_json(spark, f"{ref_out}/{COUNTY}_no_raw.json"))),
     )
     key = lambda r: tuple(r[c] for c in CLEAN_COLUMNS)
     g = sorted(key(r) for r in got.select(*CLEAN_COLUMNS).collect())

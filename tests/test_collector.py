@@ -15,12 +15,13 @@ from counsel_data_pipeline_spark.io import collector as C
 from counsel_data_pipeline_spark.io.sources import extract_rows
 from counsel_data_pipeline_spark.ops.clean import CLEAN_COLUMNS
 
-REF_OUT = "/root/reference/src/out"
+REF_OUT = "src/out"  # under the reference checkout
 COUNTIES = ["01_臺北市", "05_基隆市", "07_嘉義市"]
 
 
-def test_full_dag_from_collected_landing_files(spark, tmp_path):
-    transport, specs = C.replay_from_reference_out(REF_OUT, COUNTIES)
+def test_full_dag_from_collected_landing_files(spark, reference, tmp_path):
+    ref_out = os.path.join(reference, REF_OUT)
+    transport, specs = C.replay_from_reference_out(ref_out, COUNTIES)
     county_files = C.collect_landing(
         transport, specs, str(tmp_path / "landing"), date="2026-08-14",
         page_size=10,
@@ -45,7 +46,7 @@ def test_full_dag_from_collected_landing_files(spark, tmp_path):
     for c in COUNTIES:
         exp.extend(
             extract_rows(
-                json.load(open(os.path.join(REF_OUT, f"{c}_merged_clean.json")))
+                json.load(open(os.path.join(ref_out, f"{c}_merged_clean.json")))
             )
         )
     assert len(got) == len(exp)
@@ -234,11 +235,11 @@ def test_with_attempts_rejects_nonpositive():
         C.with_attempts(lambda: 1, max_attempts=0)
 
 
-def test_browser_transport_matches_replay_goldens(tmp_path):
+def test_browser_transport_matches_replay_goldens(reference, tmp_path):
     # S1 browser physical path: the recorded-session BrowserPage drives the
     # same collect_landing loop and must land byte-identical wrapper files
     # to the HTTP/replay path over the reference's committed raw goldens.
-    replay, specs = C.replay_from_reference_out(REF_OUT, COUNTIES)
+    replay, specs = C.replay_from_reference_out(os.path.join(reference, REF_OUT), COUNTIES)
     page = C.RecordedBrowserPage(fixtures=replay.fixtures, pager_style="pages")
     browser = C.PlaywrightTransport(page=page)
 

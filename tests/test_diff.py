@@ -1,9 +1,9 @@
 """Snapshot diff/carry-forward tests.
 
-Golden: /root/reference/out/taiwan_merged_clean.json (618 rows, "today") vs
-/root/reference/public/clinics.json (614 rows, snapshot) must split into
-615 carried + the exact 3-row delta observed in
-/root/reference/.tmp-geodiff/need-geocode.json; recombining with the
+Golden (paths under the reference checkout): out/taiwan_merged_clean.json
+(618 rows, "today") vs public/clinics.json (614 rows, snapshot) must split
+into 615 carried + the exact 3-row delta observed in
+.tmp-geodiff/need-geocode.json; recombining with the
 committed need-geocoded.json reassembles all 618 in clean order.
 
 Synthetic: the FIXTURES §1.6 edge matrix — phone wins over domain; a
@@ -12,27 +12,30 @@ matches don't carry; brand-new rows land in need_geo.
 """
 
 import json
+import os
 
 import pytest
 
 from counsel_data_pipeline_spark.io.sources import extract_rows, read_clinic_json
 from counsel_data_pipeline_spark.ops.diff import GEO_COLS, recombine, snapshot_split
 
-CLEAN = "/root/reference/out/taiwan_merged_clean.json"
-PREV = "/root/reference/public/clinics.json"
-DELTA = "/root/reference/.tmp-geodiff/need-geocode.json"
-NEWLY = "/root/reference/.tmp-geodiff/need-geocoded.json"
+# under the reference checkout
+CLEAN = "out/taiwan_merged_clean.json"
+PREV = "public/clinics.json"
+DELTA = ".tmp-geodiff/need-geocode.json"
 
 
 @pytest.fixture(scope="module")
-def split(spark):
-    clean = read_clinic_json(spark, CLEAN)
-    prev = read_clinic_json(spark, PREV).withColumnRenamed("ingest_order", "prev_order")
+def split(spark, reference):
+    clean = read_clinic_json(spark, os.path.join(reference, CLEAN))
+    prev = read_clinic_json(spark, os.path.join(reference, PREV)).withColumnRenamed(
+        "ingest_order", "prev_order"
+    )
     carried, need_geo = snapshot_split(clean, prev)
     return clean, prev, carried, need_geo
 
 
-def test_split_matches_observed_delta(split):
+def test_split_matches_observed_delta(split, reference):
     _, _, carried, need_geo = split
     got = sorted(
         (r["county"], r["org_name"], r["phone"])
@@ -40,7 +43,7 @@ def test_split_matches_observed_delta(split):
     )
     exp = sorted(
         (r["county"], r["org_name"], r["phone"])
-        for r in extract_rows(json.load(open(DELTA)))
+        for r in extract_rows(json.load(open(os.path.join(reference, DELTA))))
     )
     assert got == exp
     assert carried.count() == 618 - len(exp)
@@ -57,7 +60,7 @@ def test_carried_rows_inherit_prev_coordinates(split):
         assert r["lat"] is not None and r["lng"] is not None
 
 
-def test_recombine_reassembles_all_rows(spark, split):
+def test_recombine_reassembles_all_rows(spark, split, reference):
     # (The reference's committed need-geocoded.json is from a DIFFERENT run
     # than need-geocode.json, so synthesize the enrichment of the real
     # 3-row delta instead: stub coordinates keyed by position.)
@@ -70,7 +73,7 @@ def test_recombine_reassembles_all_rows(spark, split):
     final = recombine(clean, carried, newly)
     rows = [r.asDict() for r in final.orderBy("ingest_order").collect()]
     assert len(rows) == 618
-    delta_names = {r["org_name"] for r in extract_rows(json.load(open(DELTA)))}
+    delta_names = {r["org_name"] for r in extract_rows(json.load(open(os.path.join(reference, DELTA))))}
     n_delta = n_coords = 0
     for r in rows:
         if r["org_name"] in delta_names:

@@ -8,18 +8,20 @@ the resolver.
 """
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
 from counsel_data_pipeline_spark.ops import enrich as E
 
-CACHE = "/root/reference/data/geocode-cache.json"
-PUB = "/root/reference/public/clinics.json"
+# under the reference checkout
+CACHE = "data/geocode-cache.json"
+PUB = "public/clinics.json"
 
 
-def _cache_df(spark):
-    raw = json.load(open(CACHE))
+def _cache_df(spark, reference):
+    raw = json.load(open(os.path.join(reference, CACHE)))
     rows = [
         {
             "query": k,
@@ -38,8 +40,8 @@ def _cache_df(spark):
     return spark.createDataFrame(rows, E.CACHE_SCHEMA)
 
 
-def _clean_rows(spark, n=40):
-    rows = json.load(open(PUB))["rows"]
+def _clean_rows(spark, reference, n=40):
+    rows = json.load(open(os.path.join(reference, PUB)))["rows"]
     picked = [
         {"county": r["county"], "org_name": r["org_name"], "address": r["address"],
          "expected_lat": r.get("lat"), "expected_lng": r.get("lng")}
@@ -49,13 +51,13 @@ def _clean_rows(spark, n=40):
     return spark.createDataFrame(picked)
 
 
-def test_cache_hits_reproduce_reference_coordinates(spark):
+def test_cache_hits_reproduce_reference_coordinates(spark, reference):
     # Resolver refuses everything: any row NOT served by the cache falls
     # through to the county-centroid floor (source='centroid'), so cache
     # coverage and cache purity are both observable from provenance.
-    rows = _clean_rows(spark)
+    rows = _clean_rows(spark, reference)
     stub = E.StubResolver(accepts=lambda q: False)
-    res = E.enrich(rows, _cache_df(spark), stub)
+    res = E.enrich(rows, _cache_df(spark, reference), stub)
     got = res.enriched.collect()
     assert len(got) == rows.count()
     hits = [r for r in got if r.source is not None and r.source != "centroid"]

@@ -18,16 +18,18 @@ from counsel_data_pipeline_spark.ops.clean import CLEAN_COLUMNS
 from counsel_data_pipeline_spark.ops.enrich import StubResolver
 from test_enrich import _cache_df
 
-REF_OUT = "/root/reference/src/out"
-CLEAN = "/root/reference/out/taiwan_merged_clean.json"
-PREV = "/root/reference/public/clinics.json"
-DELTA = "/root/reference/.tmp-geodiff/need-geocode.json"
+# under the reference checkout
+REF_OUT = "src/out"
+CLEAN = "out/taiwan_merged_clean.json"
+PREV = "public/clinics.json"
+DELTA = ".tmp-geodiff/need-geocode.json"
 
 
-def test_crawl_clean_merge_union_order(spark):
+def test_crawl_clean_merge_union_order(spark, reference):
     counties = ["01_臺北市", "05_基隆市", "07_嘉義市"]
+    ref_out = os.path.join(reference, REF_OUT)
     files = [
-        (c, os.path.join(REF_OUT, f"{c}_yes_raw.json"), os.path.join(REF_OUT, f"{c}_no_raw.json"))
+        (c, os.path.join(ref_out, f"{c}_yes_raw.json"), os.path.join(ref_out, f"{c}_no_raw.json"))
         for c in counties
     ]
     res = P.crawl_clean_merge(spark, files)
@@ -39,19 +41,21 @@ def test_crawl_clean_merge_union_order(spark):
     ]
     exp = []
     for c in counties:
-        exp.extend(extract_rows(json.load(open(os.path.join(REF_OUT, f"{c}_merged_clean.json")))))
+        exp.extend(extract_rows(json.load(open(os.path.join(ref_out, f"{c}_merged_clean.json")))))
     assert len(got) == len(exp)
     for i, (g, e) in enumerate(zip(got, exp)):
         assert g == e, f"row {i} mismatch"
 
 
-def test_incremental_dag_full_run(spark):
-    clean = read_clinic_json(spark, CLEAN)
-    prev = read_clinic_json(spark, PREV).withColumnRenamed("ingest_order", "prev_order")
-    res = P.diff_enrich_publish(clean, prev, _cache_df(spark), StubResolver())
+def test_incremental_dag_full_run(spark, reference):
+    clean = read_clinic_json(spark, os.path.join(reference, CLEAN))
+    prev = read_clinic_json(spark, os.path.join(reference, PREV)).withColumnRenamed(
+        "ingest_order", "prev_order"
+    )
+    res = P.diff_enrich_publish(clean, prev, _cache_df(spark, reference), StubResolver())
 
     # T1/A4/K5: the observed steady-state delta gates publish
-    delta_names = {r["org_name"] for r in extract_rows(json.load(open(DELTA)))}
+    delta_names = {r["org_name"] for r in extract_rows(json.load(open(os.path.join(reference, DELTA))))}
     assert res.change_count == 3 and res.publish
     assert {r.org_name for r in res.delta.collect()} == delta_names
 
@@ -67,7 +71,7 @@ def test_incremental_dag_full_run(spark):
     assert len(final) == 596
 
     # carried rows: coordinates inherited from prev (T6 carry-forward)
-    prev_rows = {r["org_name"]: r for r in extract_rows(json.load(open(PREV)))}
+    prev_rows = {r["org_name"]: r for r in extract_rows(json.load(open(os.path.join(reference, PREV))))}
     carried_checked = 0
     for name, r in final.items():
         if name in prev_rows and name not in delta_names and prev_rows[name].get("lat"):
@@ -129,13 +133,14 @@ def test_incremental_dag_cold_start_empty_snapshot(spark):
     assert res.cache.count() == 5  # every resolved row wrote a cache entry
 
 
-def test_crawl_clean_merge_whole_taiwan_golden(spark):
+def test_crawl_clean_merge_whole_taiwan_golden(spark, reference):
     # Capstone M1 golden: all 22 counties through the full §3.1 DAG must
     # reproduce the committed taiwan_merged_clean.json exactly, in order.
     from test_clean_merge_golden import COUNTIES
 
+    ref_out = os.path.join(reference, REF_OUT)
     files = [
-        (c, os.path.join(REF_OUT, f"{c}_yes_raw.json"), os.path.join(REF_OUT, f"{c}_no_raw.json"))
+        (c, os.path.join(ref_out, f"{c}_yes_raw.json"), os.path.join(ref_out, f"{c}_no_raw.json"))
         for c in COUNTIES
     ]
     res = P.crawl_clean_merge(spark, files)
@@ -143,7 +148,7 @@ def test_crawl_clean_merge_whole_taiwan_golden(spark):
         {k: v for k, v in r.asDict(recursive=True).items() if k in CLEAN_COLUMNS}
         for r in res.taiwan.orderBy("taiwan_order").collect()
     ]
-    expected = json.load(open(os.path.join(REF_OUT, "taiwan_merged_clean.json")))
+    expected = json.load(open(os.path.join(ref_out, "taiwan_merged_clean.json")))
     exp_rows = extract_rows(expected)
     assert len(got) == expected["total"] == len(exp_rows)
     for i, (g, e) in enumerate(zip(got, exp_rows)):

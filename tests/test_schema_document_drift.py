@@ -25,7 +25,9 @@ from pyspark.sql import functions as F
 from counsel_data_pipeline_spark.ops.validate import clinic_violations
 from counsel_data_pipeline_spark.schemas import CLINIC, GEO_COLUMNS
 
-SCHEMA_PATH = "/root/reference/schema.clinic.json"
+from conftest import REFERENCE_DIR
+
+SCHEMA_PATH = os.path.join(REFERENCE_DIR, "schema.clinic.json")
 
 # Drift tests compare against the reference's literal schema document;
 # the engine itself is standalone, so absence of the reference checkout

@@ -11,21 +11,23 @@ Plus targeted unit cases for the individual F-functions.
 """
 
 import json
+import os
 
 import pytest
 
 from counsel_data_pipeline_spark.ops import text as T
 
-PUB = "/root/reference/public/clinics.json"
-DEV = "/root/reference/src/public/clinics.json"
-CACHE = "/root/reference/data/geocode-cache.json"
+# under the reference checkout
+PUB = "public/clinics.json"
+DEV = "src/public/clinics.json"
+CACHE = "data/geocode-cache.json"
 
 
-def _rows(path):
-    return json.load(open(path))["rows"]
+def _rows(reference, path):
+    return json.load(open(os.path.join(reference, path)))["rows"]
 
 
-def test_street_fallback_candidates_contain_used_query():
+def test_street_fallback_candidates_contain_used_query(reference):
     # A handful of rows carry a stale usedQuery recorded against an OLDER
     # address (carry-forward quirk, SURVEY §2.10 T6): the road in usedQuery
     # does not occur in the row's current address at all, so no candidate
@@ -33,7 +35,7 @@ def test_street_fallback_candidates_contain_used_query():
     # test below, rather than exact containment.
     missed = []
     checked = 0
-    for r in _rows(PUB) + _rows(DEV):
+    for r in _rows(reference, PUB) + _rows(reference, DEV):
         if r.get("approx") == "street" and r.get("usedQuery"):
             checked += 1
             cands = T.build_street_centroid_candidates(
@@ -48,8 +50,8 @@ def test_street_fallback_candidates_contain_used_query():
     )
 
 
-def test_admin_fallback_candidates_contain_used_query():
-    for r in _rows(PUB) + _rows(DEV):
+def test_admin_fallback_candidates_contain_used_query(reference):
+    for r in _rows(reference, PUB) + _rows(reference, DEV):
         if r.get("approx") == "admin" and r.get("usedQuery"):
             county, district = T.parse_region_parts(r.get("address") or "")
             tries = ([county + district] if county and district else []) + (
@@ -58,10 +60,10 @@ def test_admin_fallback_candidates_contain_used_query():
             assert r["usedQuery"] in tries, (r["org_name"], r["usedQuery"], tries)
 
 
-def test_primary_candidates_hit_cache_keys():
-    cache_keys = set(json.load(open(CACHE)).keys())
+def test_primary_candidates_hit_cache_keys(reference):
+    cache_keys = set(json.load(open(os.path.join(reference, CACHE))).keys())
     checked = hit = 0
-    for r in _rows(PUB):
+    for r in _rows(reference, PUB):
         if r.get("source") == "opencage" and not r.get("approx"):
             checked += 1
             cands = T.build_query_candidates(r.get("address") or "", r.get("org_name") or "")

@@ -5,16 +5,17 @@ Golden anchor: the reference's published dataset passes all three gates
 """
 
 import json
+import os
 
 from pyspark.sql import functions as F
 
 from counsel_data_pipeline_spark.ops import validate as V
 
-PUB = "/root/reference/public/clinics.json"
+PUB = "public/clinics.json"  # under the reference checkout
 
 
-def _pub():
-    return json.load(open(PUB))
+def _pub(reference):
+    return json.load(open(os.path.join(reference, PUB)))
 
 
 _SCHEMA = (
@@ -38,8 +39,8 @@ def _clinic_df(spark, rows):
     return spark.createDataFrame(recs, _SCHEMA)
 
 
-def test_published_dataset_passes_clinic_gate(spark):
-    rows = _pub()["rows"]
+def test_published_dataset_passes_clinic_gate(spark, reference):
+    rows = _pub(reference)["rows"]
     df = _clinic_df(spark, rows)
     split = V.split_valid(df)
     assert split.quarantined.count() == 0
@@ -86,17 +87,17 @@ def test_check_total_variants():
     assert no_total.ok and no_total.fixed["total"] == 1
 
 
-def test_check_total_matches_reference_artifact():
-    assert V.check_total(_pub()).ok
+def test_check_total_matches_reference_artifact(reference):
+    assert V.check_total(_pub(reference)).ok
 
 
-def test_published_dataset_geocode_gate_finds_carry_forward_contamination(spark):
+def test_published_dataset_geocode_gate_finds_carry_forward_contamination(spark, reference):
     # The published artifact contains 19 cross-county mis-geocodes (e.g.
     # 臺中市 clinics located at 臺北市南港區 coordinates): rows whose geo
     # fields were CARRIED FORWARD from older snapshots without
     # re-validation (SURVEY §2.10 T6). The quarantine gate must flag
     # exactly those and pass the other 595.
-    rows = _pub()["rows"]
+    rows = _pub(reference)["rows"]
     df = _clinic_df(spark, rows)
     split = V.split_geocoded(df)
     bad = split.quarantined.collect()
